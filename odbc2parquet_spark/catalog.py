@@ -138,9 +138,10 @@ def spread_scan(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
-        if not df.inputFiles() or len(df.inputFiles()) >= target:
-            return df
+        files = df.inputFiles()
     except Exception:  # noqa: BLE001 - non-file-backed plans stay as-is
+        return df
+    if not files or len(files) >= target:
         return df
     return df.repartition(target)
 

@@ -88,9 +88,12 @@ class Engine:
         ``mapping`` applies the reference's type-mapping switches
         (--avoid-decimal / --prefer-varbinary / --column-length-limit) to
         the result schema before writing — declarative casts, so Catalyst
-        still prunes and pushes down beneath them.
+        still prunes and pushes down beneath them. Its length limit also
+        sizes the sink's bytes-per-row estimate.
         """
         df = self.query(sql, params)
+        limit = None
         if mapping is not None:
             df = apply_mapping_options(df, mapping)
-        return write_parquet(df, out_path, sink)
+            limit = mapping.column_length_limit
+        return write_parquet(df, out_path, sink, limit)

@@ -293,8 +293,9 @@ def apply_mapping_options(df, opts: MappingOptions):
 
 #: bytes-per-value estimates used for memory-bounded batch sizing, the
 #: analogue of the reference's bytes-per-row computation feeding
-#: BatchSizeLimit (batch_size_limit.rs:59-109). Strings/binaries use the
-#: declared length when known, else the reference's 4096 default cap.
+#: BatchSizeLimit (batch_size_limit.rs:59-109). Strings/binaries count
+#: ``default_var_len``: the mapping's column_length_limit when one is
+#: set, else the reference's 4096 default cap.
 _FIXED_WIDTH = {
     T.BooleanType: 1,
     T.ByteType: 1,
@@ -309,7 +310,13 @@ _FIXED_WIDTH = {
 }
 
 
-def estimate_bytes_per_row(schema: T.StructType, default_var_len: int = 4096) -> int:
+#: the reference's default ``--column-length-limit`` (SURVEY B13)
+DEFAULT_VAR_LEN = 4096
+
+
+def estimate_bytes_per_row(
+    schema: T.StructType, default_var_len: int = DEFAULT_VAR_LEN
+) -> int:
     total = 0
     for f in schema.fields:
         w = _FIXED_WIDTH.get(type(f.dataType))

@@ -15,30 +15,35 @@ Reference semantics reproduced:
   "only able to insert primitive types" (src/input.rs:187-193).
 - Value conversion per the reference's C-matrix (src/input.rs:181-502):
   decimals travel as decimal TEXT (C5), timestamps as timestamp structs
-  (C8 — ISO text for DBAPI), times as hh:mm:ss.ffffff text (C3/C7).
+  (C8 — ISO text for DBAPI, instants as UTC wall clock). Conversion is
+  columnar: one converter per column, picked once from the schema,
+  applied to whole Arrow columns. TIME columns (C3/C7) never reach this
+  path: Spark rejects parquet TIME on read.
 
 Spark-first execution: two backends.
 
 - JDBC backend: ``df.write.format("jdbc").mode("append")`` — Spark's own
   batched writer, one connection per partition. The idiomatic cluster
   path; needs a JDBC driver jar (absent in this container, so gated).
-- DBAPI backend: ``foreachPartition`` + any PEP-249 connection factory +
-  ``executemany`` batches. Same execution shape as the reference's
-  columnar bulk inserter (one statement prepared once, param arrays per
-  batch), runs against sqlite in tests, and scales the same way the JDBC
-  path does: N partitions -> N parallel writers, no driver involvement.
+- DBAPI backend: ``mapInArrow`` + any PEP-249 connection factory +
+  ``executemany`` batches. Each task regroups Spark's Arrow record
+  batches into ``batch_rows``-row parameter arrays, so this is the
+  reference's columnar bulk inserter (one statement prepared once, param
+  arrays per batch). It runs against sqlite in tests and scales the same
+  way the JDBC path does: N partitions -> N parallel writers; the driver
+  receives only one row count per partition.
 """
 
 from __future__ import annotations
 
-import datetime
-import decimal
 from collections.abc import Callable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from odbc2parquet_spark.params import PlaceholderError, quote_identifier, to_positional
+from odbc2parquet_spark.sinks.parquet_sink import rebatch
 
 #: rows per executemany call — the reference's default bulk batch
 #: (src/query/batch_size_limit.rs:6-15).
@@ -75,73 +80,94 @@ def generate_insert_statement(table: str, columns: Sequence[str]) -> str:
     return f"INSERT INTO {quote_identifier(table)} ({cols}) VALUES ({marks})"
 
 
-def _to_dbapi_value(v, dt: T.DataType):
-    """Python value -> DBAPI parameter, per the reference's C-matrix."""
-    if v is None:
-        return None
+def _values(col: pa.ChunkedArray) -> list:
+    return col.to_pylist()
+
+
+def _text(col: pa.ChunkedArray) -> list:
+    return col.cast(pa.string()).to_pylist()
+
+
+def _decimal_text(col: pa.ChunkedArray) -> list:
+    return [None if v is None else format(v, "f") for v in col.to_pylist()]
+
+
+def _instant_text(col: pa.ChunkedArray) -> list:
+    # Arrow carries instants as UTC epoch values whatever the executor's OS
+    # zone; dropping the zone label keeps those values, so the text is the
+    # UTC wall clock.
+    return _text(col.cast(pa.timestamp("us")))
+
+
+def column_converter(dt: T.DataType) -> Callable[[pa.ChunkedArray], list]:
+    """Arrow column -> DBAPI parameter values, per the reference's C-matrix
+    (src/input.rs:181-502). Chosen once per column from the Spark type."""
     if isinstance(dt, T.DecimalType):
-        # C5: decimals are bound as decimal text (input.rs:795-823)
-        return format(v, "f") if isinstance(v, decimal.Decimal) else str(v)
+        # C5: decimals are bound as decimal text equal to format(v, "f")
+        # (input.rs:795-823). Arrow's cast matches that up to scale 6;
+        # above, it switches to scientific notation (1.E-10).
+        return _text if dt.scale <= 6 else _decimal_text
     if isinstance(dt, T.TimestampType):
-        # C8: instant columns. PySpark hands the executor a NAIVE datetime
-        # in the OS-local timezone (spark.sql.session.timeZone does not
-        # govern this Python-side conversion), so normalize through UTC or
-        # write-back would shift values on non-UTC executors.
-        # astimezone on a naive datetime assumes local time — exactly the
-        # tz PySpark rendered it in — and converts to UTC; aware values
-        # convert directly.
-        v = v.astimezone(datetime.timezone.utc)
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="microseconds")
-    if isinstance(dt, T.TimestampNTZType):
-        # wall-clock semantics: format as-is
-        return v.isoformat(sep=" ", timespec="microseconds")
-    if isinstance(dt, T.DateType):
-        return v.isoformat()
-    if isinstance(dt, T.BinaryType):
-        return bytes(v)
-    if isinstance(v, datetime.time):
-        # C3/C7: TIME as hh:mm:ss.ffffff text (input.rs:767-793)
-        return v.isoformat(timespec="microseconds")
-    return v
+        # C8: instant columns as UTC wall-clock ISO text
+        return _instant_text
+    if isinstance(dt, (T.TimestampNTZType, T.DateType)):
+        # wall-clock and date columns: ISO text as is
+        return _text
+    return _values
 
 
-def _executemany_partition(
-    rows_iter,
+def _executemany_batches(
+    batches,
     statement: str,
-    dtypes: list[T.DataType],
+    converters: list[Callable[[pa.ChunkedArray], list]],
     col_positions: list[int],
     connection_factory: Callable,
     batch_rows: int,
-    row_counter=None,
-) -> None:
-    """Runs on executors: one connection per partition, batched executemany.
+):
+    """Runs on executors (``mapInArrow``): one connection per partition,
+    Spark's Arrow batches regrouped into ``batch_rows``-row parameter
+    arrays, one ``executemany`` each. Yields the partition's row count.
 
-    ``col_positions[i]`` is the row index feeding parameter i (identity for
+    ``col_positions[i]`` is the column feeding parameter i (identity for
     insert; the named-placeholder mapping for exec — one column may feed
-    several parameter positions, reference input.rs:126-167).
-    ``row_counter`` is a Spark accumulator so the caller's row count rides
-    the write pass instead of costing a second scan.
+    several parameter positions, reference input.rs:126-167). Each column
+    is converted once per batch, however many parameters it feeds.
     """
     conn = connection_factory()
     n = 0
     try:
         cur = conn.cursor()
-        batch: list[tuple] = []
-        for row in rows_iter:
-            batch.append(
-                tuple(_to_dbapi_value(row[p], dtypes[p]) for p in col_positions)
-            )
-            n += 1
-            if len(batch) >= batch_rows:
-                cur.executemany(statement, batch)
-                batch.clear()
-        if batch:
-            cur.executemany(statement, batch)
+        for table in rebatch(batches, batch_rows):
+            values = {p: converters[p](table.column(p)) for p in set(col_positions)}
+            if col_positions:
+                params = list(zip(*(values[p] for p in col_positions)))
+            else:
+                params = [()] * table.num_rows
+            cur.executemany(statement, params)
+            n += table.num_rows
         conn.commit()
-        if row_counter is not None:
-            row_counter.add(n)
     finally:
         conn.close()
+    yield pa.RecordBatch.from_pydict({"rows": pa.array([n], pa.int64())})
+
+
+def _write_dbapi(
+    df: DataFrame,
+    statement: str,
+    col_positions: list[int],
+    connection_factory: Callable,
+    batch_rows: int,
+) -> int:
+    """Bulk-execute ``statement`` once per row of ``df``; returns the row
+    count, which rides the write pass (one scan total)."""
+    converters = [column_converter(f.dataType) for f in df.schema.fields]
+    counts = df.mapInArrow(
+        lambda batches: _executemany_batches(
+            batches, statement, converters, col_positions, connection_factory, batch_rows
+        ),
+        "rows long",
+    ).collect()
+    return sum(r.rows for r in counts)
 
 
 def insert_parquet(
@@ -177,16 +203,8 @@ def insert_parquet(
     if connection_factory is None:
         raise ValueError("need jdbc_url or connection_factory")
     statement = generate_insert_statement(table, df.columns)
-    dtypes = [f.dataType for f in df.schema.fields]
     positions = list(range(len(df.columns)))
-    # row count rides the write pass via an accumulator — one scan total
-    counter = spark.sparkContext.accumulator(0)
-    df.foreachPartition(
-        lambda rows: _executemany_partition(
-            rows, statement, dtypes, positions, connection_factory, batch_rows, counter
-        )
-    )
-    return counter.value
+    return _write_dbapi(df, statement, positions, connection_factory, batch_rows)
 
 
 def execute_parquet(
@@ -209,11 +227,4 @@ def execute_parquet(
             f"placeholder column(s) not in parquet file: {', '.join(missing)}"
         )
     positions = [col_index[n] for n in names]
-    dtypes = [f.dataType for f in df.schema.fields]
-    counter = spark.sparkContext.accumulator(0)
-    df.foreachPartition(
-        lambda rows: _executemany_partition(
-            rows, positional, dtypes, positions, connection_factory, batch_rows, counter
-        )
-    )
-    return counter.value
+    return _write_dbapi(df, positional, positions, connection_factory, batch_rows)

@@ -525,6 +525,111 @@ def test_stdout_empty_schema_only_and_suppressed(spark):
     assert write_parquet_stdout(empty, SinkOptions(no_empty_file=True), out=io.BytesIO()) == 0
 
 
+def test_stdout_no_empty_file_runs_plan_once(spark, tmp_path):
+    """no_empty_file needs no emptiness pre-pass: each source partition is
+    computed once, for a non-empty result and for an empty one. Every
+    evaluation leaves a marker file; an accumulator would miss the
+    evaluation a limit(1) probe stops early, as its task never reports."""
+    import io
+    import uuid
+
+    from odbc2parquet_spark.sinks.parquet_sink import write_parquet_stdout
+
+    marks = tmp_path / "marks"
+    marks.mkdir()
+
+    def mark(it):
+        (marks / uuid.uuid4().hex).touch()
+        return it
+
+    base = spark.range(0, 300, 1, 3)
+    counted = base.rdd.mapPartitions(mark).toDF(base.schema)
+    buf = io.BytesIO()
+    n = write_parquet_stdout(counted, SinkOptions(no_empty_file=True), out=buf)
+    assert n == len(buf.getvalue()) > 0
+    assert pq.read_table(io.BytesIO(buf.getvalue())).num_rows == 300
+    assert len(list(marks.iterdir())) == 3
+
+    buf = io.BytesIO()
+    empty = counted.where("id < 0")
+    assert write_parquet_stdout(empty, SinkOptions(no_empty_file=True), out=buf) == 0
+    assert buf.getvalue() == b""
+    assert len(list(marks.iterdir())) == 6
+
+
+@pytest.mark.parametrize("batch_rows, rows", [(100, 1_050), (65_535, 150_000)])
+def test_stdout_row_groups_hold_batch_rows(spark, batch_rows, rows):
+    """Row groups span partitions and Spark's Arrow batches: each holds
+    exactly batch_rows rows except the last, ceil(rows / batch_rows) in all."""
+    import io
+    import math
+
+    from odbc2parquet_spark.sinks.parquet_sink import write_parquet_stdout
+
+    buf = io.BytesIO()
+    write_parquet_stdout(
+        spark.range(0, rows, 1, 3), SinkOptions(batch_size_rows=batch_rows), out=buf
+    )
+    md = pq.ParquetFile(io.BytesIO(buf.getvalue())).metadata
+    sizes = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+    assert len(sizes) == math.ceil(rows / batch_rows)
+    assert set(sizes[:-1]) <= {batch_rows} and sum(sizes) == rows
+
+
+def test_stdout_keeps_order_by_across_partitions(spark):
+    import io
+
+    from odbc2parquet_spark.sinks.parquet_sink import write_parquet_stdout
+
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "4",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        df = spark.sql(
+            "SELECT id, (id * 7919) % 5000 AS k FROM range(0, 5000, 1, 3) "
+            "ORDER BY k DESC"
+        )
+        assert df.rdd.getNumPartitions() > 1
+        buf = io.BytesIO()
+        write_parquet_stdout(df, SinkOptions(batch_size_rows=700), out=buf)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    got = pq.read_table(io.BytesIO(buf.getvalue())).column("k").to_pylist()
+    assert got == sorted(range(5000), reverse=True)
+
+
+def test_length_limited_threshold_export_writes_once(engine, tmp_path, monkeypatch):
+    """The bytes-per-row estimate counts the mapping's column_length_limit,
+    not the 4,096 default: a threshold the estimated result fits needs one
+    Spark write (the default estimate over-splits, then rewrites)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from odbc2parquet_spark.mappings import MappingOptions
+
+    writes = []
+    spark_write = DataFrameWriter.parquet
+
+    def counting(self, path, *args, **kwargs):
+        writes.append(path)
+        return spark_write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    out = str(tmp_path / "limited.par")
+    produced = engine.query_to_parquet(
+        "SELECT l_orderkey, l_returnflag, l_linestatus FROM lineitem",
+        out,
+        sink=SinkOptions(file_size_threshold=1024 * 1024),
+        mapping=MappingOptions(column_length_limit=16),
+    )
+    assert len(writes) == 1
+    assert [os.path.basename(p) for p in produced] == ["limited_01.par"]
+
+
 def test_file_mode_removes_stale_generations(spark, tmp_path):
     """Re-exporting a SMALLER result over the same stem must not leave
     higher-numbered survivors of the previous run (out_03.par from

@@ -114,7 +114,25 @@ def test_load_table_memo_hit_and_mtime_invalidation(spark, tmp_path):
     # fingerprint in the value): the memo stays bounded by the number of
     # distinct live paths instead of accumulating stale generations
     assert len(cat._TABLE_MEMO) == n_before
-    # same-second rewrite with identical file names/sizes but new
-    # content-fingerprint (mtime_ns differs) still invalidates
     d4 = load_table(spark, str(tmp_path), "t")
-    assert d4 is d3
+    assert d4 is d3  # unchanged directory: memo hit
+    # same-second rewrite with identical name and size but new content:
+    # only mtime_ns differs, and that still replaces the entry
+    import os
+
+    import pyarrow as pa
+
+    f = str(tmp_path / "u.parquet")
+    pq.write_table(pa.table({"id": list(range(5))}), f, compression="none")
+    u1 = load_table(spark, str(tmp_path), "u")
+    assert load_table(spark, str(tmp_path), "u") is u1
+    n_before = len(cat._TABLE_MEMO)
+    st = os.stat(f)
+    pq.write_table(pa.table({"id": list(range(10, 15))}), f, compression="none")
+    assert os.path.getsize(f) == st.st_size
+    sec, ns = divmod(st.st_mtime_ns, 10**9)
+    os.utime(f, ns=(st.st_atime_ns, sec * 10**9 + (ns + 1) % 10**9))
+    u2 = load_table(spark, str(tmp_path), "u")
+    assert u2 is not u1
+    assert sorted(r.id for r in u2.collect()) == list(range(10, 15))
+    assert len(cat._TABLE_MEMO) == n_before

@@ -216,28 +216,103 @@ def test_interval_rejected_on_insert(spark):
 
 
 def test_timestamp_writeback_utc_normalized():
-    # instant columns must not shift on non-UTC executors: PySpark hands
-    # the worker a naive local-tz datetime; conversion goes through UTC
+    # instant columns must not shift on non-UTC executors: Arrow carries
+    # the instant as a UTC epoch value (labelled with the session's zone),
+    # and its text is the UTC wall clock whatever the OS zone. The input
+    # is noon local time on the executor.
     import os
     import subprocess
     import sys
 
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
-        "import datetime, sys;"
-        "sys.path.insert(0, '/root/repo');"
-        "from odbc2parquet_spark.sinks.writeback import _to_dbapi_value;"
+        "import datetime;"
+        "import pyarrow as pa;"
+        "from odbc2parquet_spark.sinks.writeback import column_converter;"
         "from pyspark.sql import types as T;"
-        "v = datetime.datetime(2024, 6, 1, 12, 0, 0);"
-        "print(_to_dbapi_value(v, T.TimestampType()))"
+        "us = int(datetime.datetime(2024, 6, 1, 12, 0, 0).timestamp()) * 10**6;"
+        "col = pa.chunked_array([pa.array([us], pa.timestamp('us', tz='Asia/Tokyo'))]);"
+        "print(column_converter(T.TimestampType())(col)[0])"
     )
-    env = dict(os.environ, TZ="America/New_York")
+    env = dict(os.environ, TZ="America/New_York", PYTHONPATH=root)
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, env=env
     ).stdout.strip()
     # noon EDT == 16:00 UTC
     assert out == "2024-06-01 16:00:00.000000"
-    env = dict(os.environ, TZ="UTC")
+    env = dict(os.environ, TZ="UTC", PYTHONPATH=root)
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, env=env
     ).stdout.strip()
     assert out == "2024-06-01 12:00:00.000000"
+
+
+def test_high_scale_decimals_insert_as_plain_text(spark, tmp_path):
+    """C5 above scale 6, where Arrow's own decimal cast would write
+    scientific notation (1.E-10): the text equals format(v, "f")."""
+    schema = T.StructType(
+        [
+            T.StructField("d38", T.DecimalType(38, 10)),
+            T.StructField("d20", T.DecimalType(20, 7)),
+        ]
+    )
+    D = decimal.Decimal
+    rows = [
+        (D("1E-10"), D("1E-7")),
+        (D("0"), D("0")),
+        (D("-12345.0000000001"), D("-0.0000001")),
+        (D("1234567890123456789012345678.0123456789"), D("1234567890123.1234567")),
+        (None, None),
+    ]
+    path = str(tmp_path / "dec.parquet")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+    db = str(tmp_path / "dec.db")
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE dec (d38, d20)")
+    con.commit()
+    con.close()
+
+    assert insert_parquet(spark, path, "dec", connection_factory=_sqlite_factory(db)) == 5
+    con = sqlite3.connect(db)
+    got = set(con.execute("SELECT d38, d20 FROM dec").fetchall())
+    con.close()
+
+    # format(v, "f") of each value at its column's scale
+    assert got == {
+        ("0.0000000001", "0.0000001"),
+        ("0.0000000000", "0.0000000"),
+        ("-12345.0000000001", "-0.0000001"),
+        ("1234567890123456789012345678.0123456789", "1234567890123.1234567"),
+        (None, None),
+    }
+
+
+def test_executemany_arrays_hold_batch_rows(spark, tmp_path):
+    """Parameter arrays span Spark's 10,000-row Arrow batches: every
+    executemany gets exactly batch_rows rows, except the last."""
+    path = str(tmp_path / "ids.parquet")
+    spark.range(0, 25_000, 1, 1).write.parquet(path)
+    log = str(tmp_path / "calls.txt")
+
+    class RecordingConnection:
+        def cursor(self):
+            return self
+
+        def executemany(self, statement, rows):
+            with open(log, "a") as fh:
+                fh.write(f"{len(rows)} {sum(r[0] for r in rows)}\n")
+
+        def commit(self):
+            pass
+
+        def close(self):
+            pass
+
+    n = insert_parquet(
+        spark, path, "ids", connection_factory=RecordingConnection, batch_rows=7_000
+    )
+    assert n == 25_000
+    with open(log) as fh:
+        calls = [tuple(map(int, line.split())) for line in fh]
+    assert [size for size, _ in calls] == [7_000, 7_000, 7_000, 4_000]
+    assert sum(total for _, total in calls) == sum(range(25_000))
